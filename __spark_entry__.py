@@ -1244,11 +1244,10 @@ def _get_seg_index(spark: SparkSession, sf_dir: str):
     # (flush rows, merge groups, per-group eval) dominated the build.
     # Results are segmentation-invariant (global dfs, per-doc scores), so
     # this is layout only; the 256 floor keeps small SFs multi-segment.
-    import pyarrow.parquet as _pq
+    from ferret_spark.segments import parquet_rows
 
-    n_docs = _pq.ParquetDataset(
-        f"{sf_dir}/documents.parquet"
-    ).read(columns=[]).num_rows
+    # documents.parquet is one file (scripts/gen_sf.py) or a dataset dir
+    n_docs = parquet_rows(f"{sf_dir}/documents.parquet")
     seg_size = max(256, n_docs // 32)
     sidx = SegmentIndexBuilder(
         spark, path, {"text": "whitespace"}, seg_size=seg_size

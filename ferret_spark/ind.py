@@ -400,8 +400,9 @@ class FerretIndex:
         return os.path.join(self.path, "deleted")
 
     def deleted_ids(self) -> set[int]:
-        """Driver-side set — tests/small indexes only; the search and
-        optimize paths use deleted_df() (never collected)."""
+        """Driver-side set — tests/small indexes only; search reads the
+        deletes dir itself and optimize uses deleted_df() (never
+        collected)."""
         p = self._deleted_path()
         if not os.path.exists(p):
             return set()
@@ -447,8 +448,12 @@ class FerretIndex:
     ) -> DataFrame:
         from ferret_spark.wand import segment_search
 
+        # the deletes dir, not a DataFrame: small queries read it with
+        # pyarrow and never open a Spark reader
+        p = self._deleted_path()
         return segment_search(
-            self.index, q, k=k, offset=offset, deleted=self.deleted_df(),
+            self.index, q, k=k, offset=offset,
+            deleted=p if os.path.exists(p) else None,
             post_filter=post_filter,
             deleted_cache_key=self._deleted_state_key(),
         )

@@ -480,6 +480,8 @@ def dedup_ngram_jaccard(
             if not parts:
                 continue
             uk, cnt = np.unique(np.concatenate(parts), return_counts=True)
+            if uk.size == 0:  # the size bound dropped every pair
+                continue
             cnt = cnt.astype(np.int32)
             shard = (uk % _NSHARDS).astype(np.int32)
             o = np.argsort(shard, kind="stable")
@@ -1116,20 +1118,6 @@ def ivf_trained_centroids(
     out = [[float(v) for v in row] for row in cents]
     _IVF_TRAIN_CACHE[key] = out
     return out
-
-
-def _ivf_dot_structs(vec: str, cents: list[list[float]]) -> str:
-    """Spark SQL array of struct(d=dot(vec, c_i), i) — struct comparison
-    orders by dot then index, so max/sort are deterministic under ties."""
-    parts = []
-    for i, c in enumerate(cents):
-        arr = ", ".join(repr(x) for x in c)
-        dot = (
-            f"aggregate(zip_with({vec}, array({arr}), (x, y) -> x * y),"
-            f" 0D, (s, x) -> s + x)"
-        )
-        parts.append(f"struct({dot} AS d, {i} AS i)")
-    return f"array({', '.join(parts)})"
 
 
 def ivf_assign(emb: DataFrame, spark: SparkSession, cents) -> DataFrame:

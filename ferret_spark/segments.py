@@ -529,9 +529,12 @@ def append_manifest(spark: SparkSession, path: str, stage: str, metrics: dict):
 
 
 def parquet_rows(path: str) -> int:
-    """Row count from parquet footers (driver-side, no Spark job)."""
+    """Row count from parquet footers (driver-side, no Spark job) of one
+    parquet file or of every ``*.parquet`` file under a directory."""
     import pyarrow.parquet as pq
 
+    if os.path.isfile(path):
+        return pq.ParquetFile(path).metadata.num_rows
     total = 0
     for root, _d, files in os.walk(path):
         for fn in files:
@@ -900,6 +903,11 @@ class SegmentIndex:
             meta,
         )
         idx.seg_markers = seg_raw.where(F.col("term").isNull())
+        # the parquet dirs behind term_stats, for driver-side df reads
+        idx.term_stats_dirs = [
+            os.path.join(path, g["term_stats"])
+            for g in (gens or [{"term_stats": "term_stats"}])
+        ]
         return idx
 
     @property

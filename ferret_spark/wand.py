@@ -22,6 +22,8 @@ could enter the top-k or change a tie.
 from __future__ import annotations
 
 import heapq
+import logging
+import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -44,6 +46,8 @@ from ferret_spark.query import (
     TermQuery,
 )
 from ferret_spark.search import ConstantScoreMatch, spark_rewrite
+
+log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -367,17 +371,19 @@ def _range_to_const(index, q: Query) -> Query:
     return q
 
 
-def _exact_pair_cond(pairs):
+def _exact_pair_cond(pairs, col=F.col):
     """Pushed scan predicate listing EXACTLY the requested (field, term)
     pairs — an OR of per-field term lists, not the fields x terms
     cross-product (which over-scans postings whenever a batch spans
-    multiple fields; VERDICT r6 finding #2)."""
+    multiple fields; VERDICT r6 finding #2).  ``col`` builds the column
+    references: ``F.col`` gives a Spark predicate, ``pyarrow.dataset.field``
+    the same predicate for a driver-side pyarrow scan."""
     by_field: dict[str, list[str]] = {}
     for f, t in pairs:
         by_field.setdefault(f, []).append(t)
     cond = None
     for f in sorted(by_field):
-        c = (F.col("field") == f) & F.col("term").isin(sorted(by_field[f]))
+        c = (col("field") == f) & col("term").isin(sorted(by_field[f]))
         cond = c if cond is None else (cond | c)
     return cond
 
@@ -1437,52 +1443,34 @@ def _n_segs_span(index, n_docs: int, seg_size: int) -> int:
     return max(1, -(-max_id // seg_size))
 
 
-def _phrase_group_search(
-    index, rq, seg_rows, dfs, avgdl_map, seg_size, n_docs,
-    local_k, k, offset, deleted_set,
-):
-    """Cross-segment phrase scoring: group key = seg_id // G, each group
-    decodes its segments' posting rows per slot, CONCATENATES the flat
-    streams (stored ids are global -> ascending across the group's
+def _rank_scored(scored: DataFrame, k, offset) -> DataFrame:
+    """Global top-k over per-segment (doc_id, float64 score) rows: rank
+    by (float32 score desc, doc_id asc), then the offset/limit page."""
+    ranked = scored.select(
+        "doc_id", F.col("score").cast("float").alias("score")
+    ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    if offset:
+        ranked = ranked.offset(offset)
+    if k is not None:
+        ranked = ranked.limit(k)
+    return ranked
+
+
+def _phrase_group_scorer(rq, dfs, avgdl_map, n_docs, local_k):
+    """The cross-segment phrase scoring closure ``score_group(key, pdf)``:
+    one segment group's posting rows (plus ``__df__`` stubs and ``__del__``
+    rows) -> its local top ``local_k`` (doc_id, float64 score).  The
+    group decodes its segments' posting rows per slot, CONCATENATES the
+    flat streams (stored ids are global -> ascending across the group's
     segments), and runs candidate intersection + the batch kernels ONCE
     per group via _phrase_freqs_from_decs.  BM25 needs no per-segment
-    state for phrases — global df arrives on the __df__ stub rows, dl
-    rides the posting stream — so the per-segment fixed cost amortizes
-    over G segments.  G targets ~2 groups per core so the group fan-out
-    still saturates the cluster; index.phrase_group_segs overrides (tests
-    force multi-segment groups)."""
+    state for phrases — global df arrives on the __df__ stub rows (or in
+    ``dfs``), dl rides the posting stream.  The distributed path runs it
+    as a grouped applyInPandas, the driver-local path calls it directly."""
     field = rq.field
     boost = rq.boost
     avgdl = avgdl_map.get(field, 1.0)
     positions = rq.positions
-    n_segs = _n_segs_span(index, n_docs, seg_size)
-    g = getattr(index, "phrase_group_segs", None)
-    if g:
-        # test override: exact seg_id // G group shapes
-        grp_expr = F.floor(F.col("seg_id") / F.lit(int(g)))
-    else:
-        # contiguous seg ranges keyed by ENGINEERED group keys whose
-        # shuffle hash lands one group per reduce partition: with ~P
-        # hash-keyed groups in P partitions, balls-in-bins collisions put
-        # 3-4 groups on one partition while others idle — the reduce
-        # stage's critical path triples for nothing
-        keys = _balanced_group_keys(index.spark)
-        n_groups = max(1, min(n_segs, len(keys)))
-        slot = F.floor(
-            F.col("seg_id") * F.lit(int(n_groups)) / F.lit(int(n_segs))
-        ).cast("int")
-        # defensive clamp: an out-of-range element_at yields a NULL key
-        # that would silently pool stray segments into one group
-        slot = F.least(slot, F.lit(n_groups - 1))
-        grp_expr = F.element_at(
-            F.array(*[F.lit(int(kk)).cast("long") for kk in keys[:n_groups]]),
-            slot + F.lit(1),
-        )
-    del_static = (
-        np.fromiter(sorted(deleted_set), dtype=np.int64, count=len(deleted_set))
-        if deleted_set
-        else None
-    )
 
     def score_group(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
         empty = pd.DataFrame(
@@ -1490,7 +1478,7 @@ def _phrase_group_search(
         )
         dfs_local = dict(dfs)
         rows_by_t: dict[str, list] = {}
-        del_parts = [] if del_static is None else [del_static]
+        del_parts = []
         for r in pdf.to_dict("records"):
             fld = r["field"]
             if fld.startswith("__df__:"):
@@ -1574,192 +1562,54 @@ def _phrase_group_search(
             s = s[order]
         return pd.DataFrame({"doc_id": dd.astype(np.int64), "score": s})
 
+    return score_group
+
+
+def _phrase_group_search(index, seg_rows, score_group, seg_size, n_docs, k, offset):
+    """Distributed cross-segment phrase scoring: group key = seg_id // G,
+    each group scored by ``score_group`` (_phrase_group_scorer), so the
+    per-segment fixed cost amortizes over G segments.  G targets ~2
+    groups per core so the group fan-out still saturates the cluster;
+    index.phrase_group_segs overrides (tests force multi-segment
+    groups)."""
+    n_segs = _n_segs_span(index, n_docs, seg_size)
+    g = getattr(index, "phrase_group_segs", None)
+    if g:
+        # test override: exact seg_id // G group shapes
+        grp_expr = F.floor(F.col("seg_id") / F.lit(int(g)))
+    else:
+        # contiguous seg ranges keyed by ENGINEERED group keys whose
+        # shuffle hash lands one group per reduce partition: with ~P
+        # hash-keyed groups in P partitions, balls-in-bins collisions put
+        # 3-4 groups on one partition while others idle — the reduce
+        # stage's critical path triples for nothing
+        keys = _balanced_group_keys(index.spark)
+        n_groups = max(1, min(n_segs, len(keys)))
+        slot = F.floor(
+            F.col("seg_id") * F.lit(int(n_groups)) / F.lit(int(n_segs))
+        ).cast("int")
+        # defensive clamp: an out-of-range element_at yields a NULL key
+        # that would silently pool stray segments into one group
+        slot = F.least(slot, F.lit(n_groups - 1))
+        grp_expr = F.element_at(
+            F.array(*[F.lit(int(kk)).cast("long") for kk in keys[:n_groups]]),
+            slot + F.lit(1),
+        )
     scored = seg_rows.groupBy(grp_expr.alias("_grp")).applyInPandas(
         score_group, "doc_id long, score double"
     )
-    ranked = scored.select(
-        "doc_id", F.col("score").cast("float").alias("score")
-    ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    if offset:
-        ranked = ranked.offset(offset)
-    if k is not None:
-        ranked = ranked.limit(k)
-    return ranked
+    return _rank_scored(scored, k, offset)
 
 
-def segment_search(
-    index,
-    q: Query,
-    k: int | None = 10,
-    offset: int = 0,
-    prune: bool = True,
-    deleted=None,
-    similarity: str = "bm25",
-    doc_boosts: dict[int, float] | None = None,
-    post_filter=None,
-    deleted_cache_key=None,
-) -> DataFrame:
-    """``deleted`` is a DataFrame with a doc_id column (distributed path —
-    each segment task receives only ITS deletions as a packed binary row)
-    or, legacy, a small driver-side set.
-
-    ``post_filter`` is the reference's user extension hook
-    (FrtPostFilter, c/include/search.h:763-769 applied in isea_search_w
-    c/src/search.c:1078-1092): callable(doc_id, score) -> factor; falsy
-    drops the hit, factor < 1.0 scales the score. It is pickled into the
-    scoring closure and runs executor-side BEFORE per-segment top-k, so
-    pruned results stay correct. Block-max pruning is disabled under a
-    post_filter (the reference's scorer loop likewise visits every hit).
-    """
-    rq = wand_rewrite(index, q)
-    rq, cached_filters = _attach_filter_cache(index, rq)
-    pairs = sorted(set(_collect_terms(rq)))
-    ranges = _collect_ranges(rq)
-    # cache the segments schema on the index — .schema is a py4j
-    # round-trip with JSON parsing (~20ms each), and plan construction
-    # needs it up to 3x per search
-    seg_schema = getattr(index, "_seg_schema_cache", None)
-    if seg_schema is None:
-        seg_schema = index.segments.schema
-        index._seg_schema_cache = seg_schema
-    bm_type = seg_schema["block_meta"].dataType
-    n_docs = index.n_docs
-    avgdl_map = dict(index.stats["avgdl"])
-    seg_size = index.seg_size
-    needs_all = _query_needs_all_docs(rq)
-
-    if not pairs and not needs_all and not ranges and not cached_filters:
-        return index.spark.createDataFrame([], "doc_id long, score float")
-
-    # Global df resolution. BM25 fuses the lookup INTO the scoring job:
-    # every matching segment gets one tiny __df__ stub row per query term
-    # (global df from a broadcast term_stats scan), so a search is ONE
-    # Spark job instead of doc_freqs-collect + scoring. TF-IDF still
-    # resolves driver-side (qnorm needs the dfs before the job).
-    fuse_dfs = similarity == "bm25" and bool(pairs)
-    dfs = {} if fuse_dfs else index.doc_freqs(pairs)
-
-    # scan predicate: exact (field, term) pushdown for the query's terms,
-    # OR'd with any uncapped range bounds (predicate stays executor-side —
-    # no driver term materialization)
-    scan_cond = None
-    if pairs:
-        scan_cond = _exact_pair_cond(pairs)
-    for r in ranges:
-        rc = r.spark_cond()
-        scan_cond = rc if scan_cond is None else (scan_cond | rc)
-
-    if not needs_all and scan_cond is None:
-        # filter-cache-only query: no posting rows needed at all — the
-        # packed __filt__ rows below carry the whole answer
-        seg_rows = index.segments.where(F.lit(False))
-    elif (pairs or ranges) and not needs_all:
-        seg_rows = index.segments.where(scan_cond)
-    else:
-        # MatchAll-bearing queries must visit every segment
-        seg_rows = index.segments
-        if scan_cond is not None:
-            seg_rows = seg_rows.where(scan_cond)
-        # union in one stub row per segment so empty segments still appear
-        all_segs = index.segments.select("seg_id").distinct()
-        stub = all_segs.select(
-            "seg_id",
-            F.lit("__stub__").alias("field"),
-            F.lit("").alias("term"),
-            F.lit(0).cast("long").alias("df"),
-            F.lit(b"").alias("doc_bin"),
-            F.lit(b"").alias("tf_bin"),
-            F.lit(b"").alias("pos_bin"),
-            F.lit(b"").alias("dl_bin"),
-            F.lit(None)
-            .cast(bm_type)
-            .alias("block_meta"),
-        )
-        seg_rows = seg_rows.unionByName(stub)
-
-    has_gdf = False
-    if fuse_dfs:
-        ts_small = index.term_stats.where(
-            _exact_pair_cond(pairs)
-        ).select("field", "term", "df")
-        if _needs_absent_dfs(rq):
-            # phrase/span idf sums include terms absent from a given
-            # segment -> ship EVERY query term's global df to every
-            # segment as __df__ stub rows.  Segment ids are doc_id //
-            # seg_size, so the full id range is known DRIVER-SIDE — a
-            # spark.range avoids re-scanning the postings parquet (a
-            # .distinct() over seg_rows was a second full scan + shuffle
-            # per query, ~0.5s at 500k docs).  Stubs landing on segments
-            # with no posting rows form groups that return empty
-            # immediately (a slot is missing), so over-shipping is
-            # harmless.  The range MUST cover id_ranges' max, not
-            # ceil(n_docs/seg_size): incremental adds align each batch to
-            # the next segment boundary, so doc-id GAPS push the last
-            # segments past the count-derived bound — a stub range keyed
-            # on n_docs starves those segments of global dfs and their
-            # phrase matches silently score idf_sum = 0.
-            n_segs = _n_segs_span(index, n_docs, seg_size)
-            seg_ids_src = index.spark.range(n_segs).select(
-                F.col("id").cast("long").alias("seg_id")
-            )
-            df_stubs = seg_ids_src.crossJoin(F.broadcast(ts_small)).select(
-                "seg_id",
-                F.concat(F.lit("__df__:"), F.col("field")).alias("field"),
-                "term",
-                "df",
-                F.lit(b"").alias("doc_bin"),
-                F.lit(b"").alias("tf_bin"),
-                F.lit(b"").alias("pos_bin"),
-                F.lit(b"").alias("dl_bin"),
-                F.lit(None)
-                .cast(bm_type)
-                .alias("block_meta"),
-            )
-            seg_rows = seg_rows.unionByName(df_stubs)
-        else:
-            # flat term queries only score terms that are locally present
-            # -> a broadcast hash join attaches each row's global df
-            # in-task (no extra shuffle, unlike a distinct+crossJoin)
-            has_gdf = True
-            seg_rows = seg_rows.join(
-                F.broadcast(ts_small.withColumnRenamed("df", "gdf")),
-                ["field", "term"],
-                "left",
-            )
-
-    # cached filter doc-id sets ride the same seg_id shuffle as postings
-    for tag, cdir in cached_filters.items():
-        fdf = index.spark.read.parquet(cdir)
-        frows = _pack_ids(fdf, seg_size, seg_schema, f"__filt__:{tag}")
-        if has_gdf:
-            frows = frows.withColumn("gdf", F.lit(None).cast("long"))
-        seg_rows = seg_rows.unionByName(frows)
-
-    if deleted is not None and isinstance(deleted, DataFrame):
-        # the pack is a groupBy shuffle of the deletes parquet — cache it
-        # per deletes-state so repeated searches on the same index
-        # generation reuse the persisted partitions (the caller supplies
-        # the state key; FerretIndex keys on the deletes dir listing)
-        cached = getattr(index, "_packed_del_cache", None)
-        if (
-            deleted_cache_key is not None
-            and cached is not None
-            and cached[0] == deleted_cache_key
-        ):
-            del_rows = cached[1]
-        else:
-            del_rows = _pack_deleted(deleted, seg_size, seg_schema)
-            if deleted_cache_key is not None:
-                del_rows = del_rows.persist()
-                if cached is not None:
-                    cached[1].unpersist()
-                index._packed_del_cache = (deleted_cache_key, del_rows)
-        if has_gdf:
-            del_rows = del_rows.withColumn("gdf", F.lit(None).cast("long"))
-        seg_rows = seg_rows.unionByName(del_rows)
-        deleted = None  # handled distributively
-
-    local_k = None if k is None else offset + k
+def _segment_scorer(
+    rq, *, similarity, prune, post_filter, local_k, dfs, has_gdf,
+    n_docs, avgdl_map, seg_size, id_ranges, qnorm, doc_boosts,
+):
+    """The per-segment scoring closure ``score_segment(key, pdf)``: one
+    segment's posting rows (plus ``__df__``/``__filt__``/``__del__`` rows,
+    and a ``gdf`` column when ``has_gdf``) -> its local top ``local_k``
+    (doc_id, float64 score).  The distributed path runs it as a grouped
+    applyInPandas, the driver-local path calls it directly."""
     # interval block-max WAND pays off for small disjunctions; past ~32
     # terms the vectorized dense-accumulator exact path is faster (one
     # np.add.at per term vs per-interval × per-term slicing)
@@ -1780,49 +1630,12 @@ def segment_search(
         and local_k is not None
         and _bool_wandable(rq)
     )
-    qnorm = 1.0
-    if similarity == "tfidf":
-        from ferret_spark import similarity as S
-
-        qnorm = S.query_norm(S.sum_sq_weights(rq, dfs, n_docs, None))
-    doc_boosts = doc_boosts or {}
-    rq_for_exec = rq
-
-    deleted = deleted or set()
-    id_ranges = getattr(index, "id_ranges", None) or [[0, n_docs]]
-
-    # plain phrases take the CROSS-SEGMENT batch path: several segments
-    # share one applyInPandas group and their decoded posting streams
-    # concatenate (stored doc ids are global, so per-slot streams stay
-    # sorted), so the fixed per-segment eval cost — row parsing, decode
-    # dispatch, candidate intersect, one kernel invocation — is paid once
-    # per GROUP.  At 2M docs / 488 segments this is the difference
-    # between 488 and ~70 kernel invocations for the same work.
-    if (
-        similarity == "bm25"
-        and post_filter is None
-        and not cached_filters
-        and isinstance(rq, PhraseQuery)
-        and rq.positions
-        and all(len(alts) == 1 for _, alts in rq.positions)
-    ):
-        return _phrase_group_search(
-            index, rq, seg_rows, dfs, avgdl_map, seg_size, n_docs,
-            local_k, k, offset, deleted,
-        )
 
     def score_segment(key, pdf):  # no hints: pyspark warns on partial grouped-map hints
         seg_id = int(key[0])
         base = seg_id * seg_size
         seg_n = seg_size
-        del_local = (
-            np.array(
-                sorted(d - base for d in deleted if base <= d < base + seg_n),
-                dtype=np.int64,
-            )
-            if deleted
-            else None
-        )
+        del_local = None
         dfs_local = dict(dfs)
         rows_by_ft = {}
         filt_local: dict[str, np.ndarray] = {}
@@ -1878,21 +1691,19 @@ def segment_search(
                 rows_by_ft, dfs_local, n_docs, avgdl_map, base, seg_n, id_ranges
             )
         ev.cached_filters = filt_local
-        if use_wand and isinstance(rq_for_exec, MultiTermQuery):
-            docs, scores = _wand_multiterm_topk(
-                ev, rq_for_exec, local_k, del_local
-            )
+        if use_wand:
+            docs, scores = _wand_multiterm_topk(ev, rq, local_k, del_local)
             return pd.DataFrame(
                 {"doc_id": [d + base for d in docs], "score": scores}
             )
-        if use_bool_wand and isinstance(rq_for_exec, BooleanQuery):
+        if use_bool_wand:
             docs, scores, _skipped = _wand_bool_topk(
-                ev, rq_for_exec, local_k, del_local
+                ev, rq, local_k, del_local
             )
             return pd.DataFrame(
                 {"doc_id": [d + base for d in docs], "score": scores}
             )
-        mask, score = ev.eval(rq_for_exec)
+        mask, score = ev.eval(rq)
         if del_local is not None and len(del_local):
             mask[del_local] = False
         if post_filter is not None:
@@ -1915,17 +1726,383 @@ def segment_search(
             }
         )
 
-    scored = seg_rows.groupBy("seg_id").applyInPandas(
-        score_segment, "doc_id long, score double"
+    return score_segment
+
+
+# Driver-local bound, in postings.  A query whose rows come from exact
+# (field, term) pairs, and whose terms' global dfs plus the pending
+# deletes sum to at most this many, is scored on the driver: pyarrow
+# reads its posting rows and the shared scoring closures run in-process,
+# so the search launches no Spark job.  Above it the distributed plan
+# runs.  Set from the measured driver-vs-distributed crossover on a
+# 4-core host: the costliest class per posting, a 3-slot sloppy phrase
+# over hot terms with a repeated term, breaks even near 11k postings;
+# term, boolean and exact-phrase queries stay 5-10x faster on the driver
+# well past it (SCALE.md §4).
+DRIVER_POSTINGS_MAX = 12_000
+# The driver's segments scan prunes row groups by term statistics, but
+# segment files sort by seg_id first, so it reads close to the whole
+# table (~2.5 ms/MB measured on 4 cores) whatever the query's postings.
+# Past this many bytes on disk the scan alone nears the distributed
+# wall, so larger indexes keep the distributed path.
+DRIVER_SCAN_BYTES_MAX = 128 << 20
+
+
+def _driver_inputs(index, pairs, deleted):
+    """(postings, local): ``postings`` is the query's Σ global df plus the
+    deletes' row count, read with pyarrow (a pushed-filter scan of each
+    generation's term_stats, summed per (field, term) as
+    SegmentIndex.load's union does; parquet footers for the deletes).
+    ``local`` is (dfs, sorted deleted ids) when ``postings`` is within
+    DRIVER_POSTINGS_MAX, else None.  Both are None when the index was not
+    loaded from disk or its segments table is over DRIVER_SCAN_BYTES_MAX."""
+    import pyarrow.dataset as ds
+
+    from ferret_spark.segments import _dir_bytes, parquet_rows
+
+    dirs = getattr(index, "term_stats_dirs", None)
+    if (
+        not dirs
+        or _dir_bytes(os.path.join(index.path, "segments"))
+        > DRIVER_SCAN_BYTES_MAX
+    ):
+        return None, None
+    cond = _exact_pair_cond(pairs, ds.field)
+    dfs = dict.fromkeys(pairs, 0)
+    for d in dirs:
+        t = ds.dataset(d, format="parquet").to_table(
+            columns=["field", "term", "df"], filter=cond
+        )
+        cols = (t.column(c).to_pylist() for c in ("field", "term", "df"))
+        for f, term, df in zip(*cols):
+            dfs[(f, term)] += df
+    n_del = parquet_rows(deleted) if deleted else 0
+    postings = sum(dfs.values()) + n_del
+    if postings > DRIVER_POSTINGS_MAX:
+        return postings, None
+    ids = np.empty(0, dtype=np.int64)
+    if n_del:
+        ids = ds.dataset(deleted, format="parquet").to_table(
+            columns=["doc_id"]
+        ).column("doc_id").to_numpy()
+    return postings, (dfs, np.unique(ids.astype(np.int64)))
+
+
+def _local_ranked(spark, doc_ids, scores) -> DataFrame:
+    """Ranked (doc_id, float32 score) rows as a local relation.  The
+    arrays cross as one Arrow table, so collecting the result runs no
+    Spark job; createDataFrame from a Python list would parallelize the
+    rows and launch one."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "doc_id": pa.array(doc_ids, type=pa.int64()),
+                "score": pa.array(scores, type=pa.float32()),
+            }
+        )
     )
-    ranked = scored.select(
-        "doc_id", F.col("score").cast("float").alias("score")
-    ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    if offset:
-        ranked = ranked.offset(offset)
+
+
+def _driver_topk(index, pairs, dead, scorer, phrase, k, offset):
+    """Driver-local execution: pyarrow reads the query's posting rows
+    (the _exact_pair_cond predicate, pruned by row-group statistics),
+    ``scorer`` runs once per segment (once per segment group for a
+    phrase, where ``index.phrase_group_segs`` sets the group width as on
+    the distributed path), deletes ride as packed ``__del__`` rows, and
+    the ranked page comes back as a local relation."""
+    import pyarrow.dataset as ds
+
+    seg_size = index.seg_size
+    rows = ds.dataset(
+        os.path.join(index.path, "segments"), format="parquet"
+    ).to_table(filter=_exact_pair_cond(pairs, ds.field)).to_pandas()
+    keys = rows["seg_id"].to_numpy(dtype=np.int64)
+    if phrase:
+        g = getattr(index, "phrase_group_segs", None)
+        keys = keys // int(g) if g else np.zeros_like(keys)
+    docs, scores = [], []
+    for key, grp in rows.groupby(keys, sort=True):
+        key = int(key)
+        if phrase:  # score_group drops deletes by global id
+            lo, hi = 0, dead.size
+        else:
+            lo, hi = np.searchsorted(dead, (key * seg_size, (key + 1) * seg_size))
+        if hi > lo:
+            packed = {
+                "seg_id": key, "field": "__del__", "term": "",
+                "df": int(hi - lo), "doc_bin": dead[lo:hi].tobytes(),
+                "tf_bin": b"", "pos_bin": b"", "dl_bin": b"",
+                "block_meta": None,
+            }
+            grp = pd.concat([grp, pd.DataFrame([packed])], ignore_index=True)
+        out = scorer((key,), grp)
+        docs.append(out["doc_id"].to_numpy(dtype=np.int64))
+        scores.append(out["score"].to_numpy(dtype=np.float64))
+    doc_ids = np.concatenate(docs) if docs else np.empty(0, dtype=np.int64)
+    f32 = (np.concatenate(scores) if scores else np.empty(0)).astype(np.float32)
+    order = np.lexsort((doc_ids, -f32))[offset:]
     if k is not None:
-        ranked = ranked.limit(k)
-    return ranked
+        order = order[:k]
+    return _local_ranked(index.spark, doc_ids[order], f32[order])
+
+
+def segment_search(
+    index,
+    q: Query,
+    k: int | None = 10,
+    offset: int = 0,
+    prune: bool = True,
+    deleted=None,
+    similarity: str = "bm25",
+    doc_boosts: dict[int, float] | None = None,
+    post_filter=None,
+    deleted_cache_key=None,
+) -> DataFrame:
+    """``deleted`` is a parquet directory of deleted doc ids (FerretIndex's
+    lazy deletes) or None. The driver-local path reads it with pyarrow;
+    the distributed path packs it per segment, so each segment task
+    receives only ITS deletions as a packed binary row.
+
+    Small queries run on the driver: when the query's rows come from
+    exact (field, term) pairs, their global dfs plus the deletes sum to
+    at most DRIVER_POSTINGS_MAX postings and the segments table is within
+    DRIVER_SCAN_BYTES_MAX, pyarrow reads the posting rows, the same
+    scoring closures run in-process and the page returns as a local
+    relation — no Spark job (SCALE.md §4).  MatchAll stubs,
+    uncapped range/match predicates and cached filter doc sets keep the
+    distributed path.  The chosen path, the postings count and the
+    bound are logged at DEBUG.
+
+    ``post_filter`` is the reference's user extension hook
+    (FrtPostFilter, c/include/search.h:763-769 applied in isea_search_w
+    c/src/search.c:1078-1092): callable(doc_id, score) -> factor; falsy
+    drops the hit, factor < 1.0 scales the score. It is pickled into the
+    scoring closure and runs BEFORE per-segment top-k, so pruned results
+    stay correct. Block-max pruning is disabled under a post_filter (the
+    reference's scorer loop likewise visits every hit).
+    """
+    rq = wand_rewrite(index, q)
+    rq, cached_filters = _attach_filter_cache(index, rq)
+    pairs = sorted(set(_collect_terms(rq)))
+    ranges = _collect_ranges(rq)
+    needs_all = _query_needs_all_docs(rq)
+
+    postings, local = None, None
+    if not pairs and not needs_all and not ranges and not cached_filters:
+        path = "empty"
+    else:
+        if not (needs_all or ranges or cached_filters):
+            postings, local = _driver_inputs(index, pairs, deleted)
+        path = "distributed" if local is None else "driver"
+    log.debug(
+        "segment_search path=%s postings=%s bound=%d",
+        path, postings, DRIVER_POSTINGS_MAX,
+    )
+    if path == "empty":
+        return _local_ranked(index.spark, [], [])
+
+    n_docs = index.n_docs
+    avgdl_map = dict(index.stats["avgdl"])
+    seg_size = index.seg_size
+    id_ranges = getattr(index, "id_ranges", None) or [[0, n_docs]]
+    local_k = None if k is None else offset + k
+
+    # Global df resolution. The driver path already holds every query
+    # term's global df. The distributed BM25 path fuses the lookup INTO
+    # the scoring job: every matching segment gets one tiny __df__ stub
+    # row per query term, or a gdf column (global df from a broadcast
+    # term_stats scan), so a search is ONE Spark job instead of
+    # doc_freqs-collect + scoring. TF-IDF still resolves driver-side
+    # (qnorm needs the dfs before the job).
+    fuse_dfs = local is None and similarity == "bm25" and bool(pairs)
+    if local is not None:
+        dfs, dead = local
+    else:
+        dfs = {} if fuse_dfs else index.doc_freqs(pairs)
+    # phrase/span idf sums include terms absent from a given segment, so
+    # they take __df__ stubs; flat term queries a gdf column
+    has_gdf = fuse_dfs and not _needs_absent_dfs(rq)
+    qnorm = 1.0
+    if similarity == "tfidf":
+        from ferret_spark import similarity as S
+
+        qnorm = S.query_norm(S.sum_sq_weights(rq, dfs, n_docs, None))
+    # plain phrases take the CROSS-SEGMENT batch path: several segments
+    # share one scoring group and their decoded posting streams
+    # concatenate (stored doc ids are global, so per-slot streams stay
+    # sorted), so the fixed per-segment eval cost — row parsing, decode
+    # dispatch, candidate intersect, one kernel invocation — is paid once
+    # per GROUP.  At 2M docs / 488 segments this is the difference
+    # between 488 and ~70 kernel invocations for the same work.
+    plain_phrase = (
+        similarity == "bm25"
+        and post_filter is None
+        and not cached_filters
+        and isinstance(rq, PhraseQuery)
+        and bool(rq.positions)
+        and all(len(alts) == 1 for _, alts in rq.positions)
+    )
+    if plain_phrase:
+        scorer = _phrase_group_scorer(rq, dfs, avgdl_map, n_docs, local_k)
+    else:
+        scorer = _segment_scorer(
+            rq,
+            similarity=similarity,
+            prune=prune,
+            post_filter=post_filter,
+            local_k=local_k,
+            dfs=dfs,
+            has_gdf=has_gdf,
+            n_docs=n_docs,
+            avgdl_map=avgdl_map,
+            seg_size=seg_size,
+            id_ranges=id_ranges,
+            qnorm=qnorm,
+            doc_boosts=doc_boosts or {},
+        )
+    if local is not None:
+        return _driver_topk(index, pairs, dead, scorer, plain_phrase, k, offset)
+
+    # cache the segments schema on the index — .schema is a py4j
+    # round-trip with JSON parsing (~20ms each), and plan construction
+    # needs it up to 3x per search
+    seg_schema = getattr(index, "_seg_schema_cache", None)
+    if seg_schema is None:
+        seg_schema = index.segments.schema
+        index._seg_schema_cache = seg_schema
+    bm_type = seg_schema["block_meta"].dataType
+
+    # scan predicate: exact (field, term) pushdown for the query's terms,
+    # OR'd with any uncapped range bounds (predicate stays executor-side —
+    # no driver term materialization)
+    scan_cond = None
+    if pairs:
+        scan_cond = _exact_pair_cond(pairs)
+    for r in ranges:
+        rc = r.spark_cond()
+        scan_cond = rc if scan_cond is None else (scan_cond | rc)
+
+    if not needs_all and scan_cond is None:
+        # filter-cache-only query: no posting rows needed at all — the
+        # packed __filt__ rows below carry the whole answer
+        seg_rows = index.segments.where(F.lit(False))
+    elif (pairs or ranges) and not needs_all:
+        seg_rows = index.segments.where(scan_cond)
+    else:
+        # MatchAll-bearing queries must visit every segment
+        seg_rows = index.segments
+        if scan_cond is not None:
+            seg_rows = seg_rows.where(scan_cond)
+        # union in one stub row per segment so empty segments still appear
+        all_segs = index.segments.select("seg_id").distinct()
+        stub = all_segs.select(
+            "seg_id",
+            F.lit("__stub__").alias("field"),
+            F.lit("").alias("term"),
+            F.lit(0).cast("long").alias("df"),
+            F.lit(b"").alias("doc_bin"),
+            F.lit(b"").alias("tf_bin"),
+            F.lit(b"").alias("pos_bin"),
+            F.lit(b"").alias("dl_bin"),
+            F.lit(None)
+            .cast(bm_type)
+            .alias("block_meta"),
+        )
+        seg_rows = seg_rows.unionByName(stub)
+
+    if fuse_dfs:
+        ts_small = index.term_stats.where(
+            _exact_pair_cond(pairs)
+        ).select("field", "term", "df")
+        if has_gdf:
+            # flat term queries only score terms that are locally present
+            # -> a broadcast hash join attaches each row's global df
+            # in-task (no extra shuffle, unlike a distinct+crossJoin)
+            seg_rows = seg_rows.join(
+                F.broadcast(ts_small.withColumnRenamed("df", "gdf")),
+                ["field", "term"],
+                "left",
+            )
+        else:
+            # phrase/span idf sums include terms absent from a given
+            # segment -> ship EVERY query term's global df to every
+            # segment as __df__ stub rows.  Segment ids are doc_id //
+            # seg_size, so the full id range is known DRIVER-SIDE — a
+            # spark.range avoids re-scanning the postings parquet (a
+            # .distinct() over seg_rows was a second full scan + shuffle
+            # per query, ~0.5s at 500k docs).  Stubs landing on segments
+            # with no posting rows form groups that return empty
+            # immediately (a slot is missing), so over-shipping is
+            # harmless.  The range MUST cover id_ranges' max, not
+            # ceil(n_docs/seg_size): incremental adds align each batch to
+            # the next segment boundary, so doc-id GAPS push the last
+            # segments past the count-derived bound — a stub range keyed
+            # on n_docs starves those segments of global dfs and their
+            # phrase matches silently score idf_sum = 0.
+            n_segs = _n_segs_span(index, n_docs, seg_size)
+            seg_ids_src = index.spark.range(n_segs).select(
+                F.col("id").cast("long").alias("seg_id")
+            )
+            df_stubs = seg_ids_src.crossJoin(F.broadcast(ts_small)).select(
+                "seg_id",
+                F.concat(F.lit("__df__:"), F.col("field")).alias("field"),
+                "term",
+                "df",
+                F.lit(b"").alias("doc_bin"),
+                F.lit(b"").alias("tf_bin"),
+                F.lit(b"").alias("pos_bin"),
+                F.lit(b"").alias("dl_bin"),
+                F.lit(None)
+                .cast(bm_type)
+                .alias("block_meta"),
+            )
+            seg_rows = seg_rows.unionByName(df_stubs)
+
+    # cached filter doc-id sets ride the same seg_id shuffle as postings
+    for tag, cdir in cached_filters.items():
+        fdf = index.spark.read.parquet(cdir)
+        frows = _pack_ids(fdf, seg_size, seg_schema, f"__filt__:{tag}")
+        if has_gdf:
+            frows = frows.withColumn("gdf", F.lit(None).cast("long"))
+        seg_rows = seg_rows.unionByName(frows)
+
+    if deleted is not None:
+        # the pack is a groupBy shuffle of the deletes parquet — cache it
+        # per deletes-state so repeated searches on the same index
+        # generation reuse the persisted partitions (the caller supplies
+        # the state key; FerretIndex keys on the deletes dir listing)
+        cached = getattr(index, "_packed_del_cache", None)
+        if (
+            deleted_cache_key is not None
+            and cached is not None
+            and cached[0] == deleted_cache_key
+        ):
+            del_rows = cached[1]
+        else:
+            del_rows = _pack_deleted(
+                index.spark.read.parquet(deleted).select("doc_id"),
+                seg_size,
+                seg_schema,
+            )
+            if deleted_cache_key is not None:
+                del_rows = del_rows.persist()
+                if cached is not None:
+                    cached[1].unpersist()
+                index._packed_del_cache = (deleted_cache_key, del_rows)
+        if has_gdf:
+            del_rows = del_rows.withColumn("gdf", F.lit(None).cast("long"))
+        seg_rows = seg_rows.unionByName(del_rows)
+
+    if plain_phrase:
+        return _phrase_group_search(
+            index, seg_rows, scorer, seg_size, n_docs, k, offset
+        )
+    scored = seg_rows.groupBy("seg_id").applyInPandas(
+        scorer, "doc_id long, score double"
+    )
+    return _rank_scored(scored, k, offset)
 
 
 def _batchable_seg_query(rq) -> bool:

@@ -4,10 +4,14 @@ BitVector is computed once per reader in the reference,
 c/src/index.c:5729-5745)."""
 
 import ferret_spark as fs
+import ferret_spark.wand as W
 from ferret_spark.ind import FerretIndex
 
 
-def test_packed_deletes_reused_across_searches(spark, tmp_path):
+def test_packed_deletes_reused_across_searches(spark, tmp_path, monkeypatch):
+    # packed deletes belong to the distributed path; this 24-doc index is
+    # under the driver-local bound, so pin the distributed path
+    monkeypatch.setattr(W, "DRIVER_POSTINGS_MAX", 0)
     rows = [(i, f"alpha beta w{i % 7} doc") for i in range(24)]
     df = spark.createDataFrame(rows, "doc_id long, content string")
     idx = FerretIndex(

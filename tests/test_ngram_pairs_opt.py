@@ -74,3 +74,22 @@ def test_ngram_jaccard_low_threshold_matches_reference(spark):  # noqa: F811
     want = _reference_pairs(spark, sf_dir, threshold=0.05).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) > 0
+
+
+def test_ngram_jaccard_size_bound_drops_every_pair(spark, tmp_path):  # noqa: F811
+    """A pair-blob batch whose every pair fails the map-side size-ratio
+    bound (a 1-shingle doc sharing its shingle with a 40-shingle doc:
+    J <= 1/40 < 0.4) yields no blob and no pair instead of raising."""
+    import pandas as pd
+
+    long_doc = "a0 a1 a2 " + " ".join(f"b{i}" for i in range(40))
+    pd.DataFrame(
+        {
+            "doc_id": [0, 1],
+            "text": ["a0 a1 a2", long_doc],
+            "lang": ["en", "en"],
+            "source": ["s", "s"],
+            "n_chars": [8, len(long_doc)],
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    assert dedup_ngram_jaccard(spark, str(tmp_path)).collect() == []

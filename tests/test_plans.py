@@ -52,8 +52,12 @@ def test_topk_uses_take_ordered(saved_idx):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_segment_scan_pushdown(spark, tmp_path_factory):
+def test_segment_scan_pushdown(spark, tmp_path_factory, monkeypatch):
+    import ferret_spark.wand as W
     from ferret_spark.segments import SegmentIndexBuilder
+
+    # a 20-doc index is under the driver-local bound: pin the plan path
+    monkeypatch.setattr(W, "DRIVER_POSTINGS_MAX", 0)
 
     rows = [dict(r, doc_id=i) for i, r in enumerate(golden_rows())]
     path = str(tmp_path_factory.mktemp("plan_seg"))

@@ -237,3 +237,25 @@ def test_typed_range_pushdown_no_full_collect(golden_seg):
         ).collect()
     }
     assert set(rw.terms) == expect and len(expect) > 0
+
+
+def test_parquet_rows_file_and_directory(tmp_path):
+    """Footer row counts for both layouts an input table comes in: a
+    single parquet file (scripts/gen_sf.py's documents.parquet) and a
+    directory of part files beside non-parquet markers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ferret_spark.segments import parquet_rows
+
+    one = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": list(range(7))}), one)
+    assert parquet_rows(str(one)) == 7
+
+    d = tmp_path / "parts"
+    (d / "sub").mkdir(parents=True)
+    pq.write_table(pa.table({"doc_id": [1, 2, 3]}), d / "part-0.parquet")
+    pq.write_table(pa.table({"doc_id": [4, 5]}), d / "sub" / "part-1.parquet")
+    (d / "_SUCCESS").write_bytes(b"")
+    assert parquet_rows(str(d)) == 5
+    assert parquet_rows(str(tmp_path / "missing")) == 0
